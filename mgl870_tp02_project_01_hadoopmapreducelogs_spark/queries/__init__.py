@@ -94,6 +94,47 @@ def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     return max(1, math.ceil(size / mpb))
 
 
+#: (applicationId, sf_dir, name) -> value built by ``session_memo``
+_memo_store: dict[tuple[str, str, str], object] = {}
+
+
+def session_memo(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], object]
+):
+    """Return the shared intermediate ``name`` of corpus ``sf_dir``,
+    calling ``build()`` only when the live session has not built it yet.
+
+    This is the engine's one caching boundary. A memo may serve only
+    the DOWNSTREAM consumers of an intermediate: the registered entry
+    that produces it stays uncached, so its own number keeps measuring
+    the full pipeline. Entries live per (session, corpus): a miss first
+    releases every entry of the live session keyed on a different
+    corpus (``unpersist()`` on each DataFrame of the stored value, or
+    of the stored tuple), so a superseded corpus's cached frames never
+    stay resident until the session ends (unpersist is safe even if a
+    stale plan still references a frame — it only recomputes). Sibling
+    names of the live corpus are kept. Entries of a stopped session are
+    dropped without touching py4j: their executors, and so their cached
+    blocks, are gone already, and unpersist on a dead context would
+    raise. The store is keyed on applicationId for exactly that reason.
+    """
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
+    if key in _memo_store:
+        return _memo_store[key]
+    for old in list(_memo_store):
+        if old[:2] == key[:2]:
+            continue
+        value = _memo_store.pop(old)
+        if old[0] == app:
+            for part in value if isinstance(value, tuple) else (value,):
+                if isinstance(part, DataFrame):
+                    part.unpersist()
+    value = build()
+    _memo_store[key] = value
+    return value
+
+
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming variant of ``load('events')`` — same ns→µs handling."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -133,7 +174,9 @@ from . import (  # noqa: E402,F401
 # ordering is evidence budget. Round-14 rotation (optimization round 2):
 # (a) entries whose CODE is touched by this round's optimizations lead
 # the window so every plan change gets same-round driver re-gating —
-# this block is appended to as the round progresses; (b) the full
+# this block is appended to as the round progresses, and every append
+# must displace an entry from block (c), because tests/test_bench.py
+# pins the list at exactly 50 entries; (b) the full
 # 41-entry r9-stamped cohort turning five rounds old (the VERDICT r12
 # aging rule — sim_knn/lsh, the dq_* family, split_leakage_audit, the
 # text fingerprint/novelty wave, setop_intersect_except, the cube/

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import multimodal
-from . import load, register
+from . import load, register, session_memo
 from .textops import NORM_SQL
 
 _SINK_N = 0
@@ -768,44 +768,24 @@ def _dhash_synth(batches):
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": fp})
 
 
-#: one live (applicationId, sf_dir) -> cached fingerprint frame per
-#: kernel; the next different corpus evicts + unpersists (the
-#: _SHINGLE_MEMO idiom — ADVICE r12: un-memoized, the pair entry
-#: cached the frame for the session lifetime and the groups entry's
-#: rebuild cached a SECOND copy)
-_PHASH_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _image_fingerprints(spark: SparkSession, sf_dir: str, kernel) -> DataFrame:
     """The cached (doc_id, simhash) image-fingerprint frame for
-    ``kernel`` (_phash_synth or _dhash_synth) — memoized per (session,
-    corpus, kernel) so the pair and groups entries share ONE cached
-    frame, with superseded corpora unpersisted rather than living
-    until the session ends. Entries from a stopped SparkSession are
-    dropped without touching py4j (unpersist on a dead context
-    raises)."""
+    ``kernel`` (_phash_synth or _dhash_synth), built once per
+    (session, corpus, kernel) through ``session_memo`` so the pair and
+    groups entries share ONE cached frame — un-memoized, the pair
+    entry cached the frame for the session lifetime and the groups
+    entry's rebuild cached a SECOND copy."""
     from . import scan_partitions, spread
 
-    key = (spark.sparkContext.applicationId, sf_dir, kernel.__name__)
-    hit = _PHASH_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for old_key, frame in list(_PHASH_MEMO.items()):
-        if old_key[:2] == key[:2]:
-            continue  # same session + corpus, sibling kernel — keep
-        if old_key[0] == key[0]:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-        del _PHASH_MEMO[old_key]
-    docs = spread(
-        load(spark, sf_dir, "documents").select("doc_id"),
-        scan_partitions(spark, sf_dir, "documents"),
-    )
-    hashes = docs.mapInPandas(kernel, "doc_id long, simhash long").cache()
-    _PHASH_MEMO[key] = hashes
-    return hashes
+    def build() -> DataFrame:
+        docs = spread(
+            load(spark, sf_dir, "documents").select("doc_id"),
+            scan_partitions(spark, sf_dir, "documents"),
+        )
+        return docs.mapInPandas(kernel, "doc_id long, simhash long").cache()
+
+    name = f"image_fingerprints:{kernel.__name__}"
+    return session_memo(spark, sf_dir, name, build)
 
 
 @register(

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from . import load, register, scan_partitions, spread
+from . import load, register, scan_partitions, session_memo, spread
 
 # --- token counting -----------------------------------------------------------
 
@@ -344,45 +344,21 @@ JACCARD_EDGES_SQL = JACCARD_CAND_SQL + f""",
     )"""
 
 
-#: one live (applicationId, sf_dir) -> (raw, capped) cached pair; the
-#: next different corpus evicts + unpersists it (ADVICE r11: the
-#: budget audit builds this pipeline twice — directly and through
-#: dedup_ngram_jaccard — and un-memoized each build cached two frames
-#: that stayed resident for the session)
-_SHINGLE_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped shingle table (doc_id, shingle) — cached (it has
-    2+ consumers everywhere it appears: discovery grouping, the
-    per-doc set table, the audit's full expansion); shared by the
-    production discovery and the budget audit so the cap and the
-    anti-join can never drift between them. Memoized per (session,
-    corpus) so the audit's two builds reference ONE cached pair, and
-    a superseded corpus's corpus-scale shingle tables are unpersisted
-    rather than living until the session ends (unpersist is safe even
-    if a stale plan still references them — it only recomputes)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLE_MEMO.get(key)
-    if hit is not None:
-        return hit[1]
-    for old_key, (raw, capped) in list(_SHINGLE_MEMO.items()):
-        # only unpersist frames owned by the LIVE session; entries from
-        # a previous, now-stopped SparkSession in the same Python
-        # process would make py4j raise on the dead context (ADVICE
-        # r12) — their executors are gone, so dropping the dict entry
-        # is the whole cleanup
-        if old_key[0] == key[0]:
-            try:
-                raw.unpersist()
-                capped.unpersist()
-            except Exception:
-                pass
-        del _SHINGLE_MEMO[old_key]
-    sh0 = _doc_shingles(spark, sf_dir).cache()
-    capped = _df_capped(sh0).cache()
-    _SHINGLE_MEMO[key] = (sh0, capped)
-    return capped
+    2+ consumers everywhere it appears: discovery grouping and the
+    per-doc set table), with the raw table it is capped from cached
+    beside it (the df aggregate and the anti-join both read it). Built
+    once per (session, corpus) through ``session_memo``, so every
+    consumer of the production pair builder references ONE cached pair
+    and a superseded corpus's corpus-scale shingle tables are
+    unpersisted rather than living until the session ends."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        sh0 = _doc_shingles(spark, sf_dir).cache()
+        return sh0, _df_capped(sh0).cache()
+
+    return session_memo(spark, sf_dir, "capped_shingles", build)[1]
 
 
 def _df_capped(sh0: DataFrame) -> DataFrame:
@@ -433,38 +409,25 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_budgeted_pairs(_capped_shingles(spark, sf_dir))
 
 
-#: one live (applicationId, sf_dir) -> cached thresholded-pair frame;
-#: next different corpus evicts + unpersists (the _SHINGLE_MEMO idiom)
-_JACCARD_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _jaccard_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The thresholded Jaccard pair set (doc_a, doc_b), cached for the
-    DOWNSTREAM consumers — connected components, the LSH recall audit
-    (three aggregates over one pair set), PageRank. r13 OPTIMIZATION
-    (guide §5 — persist only what is reused and cheaper cached than
-    recomputed): each consumer previously re-ran budgeted discovery +
-    exact verification over the (already cached) shingle table per
-    action; the pair set is strictly smaller than the shingle table
-    the session already pins (near-dup pairs are a corpus fraction),
-    so caching it is the cheaper side of that trade at any scale.
-    The registered dedup_ngram_jaccard entry itself stays uncached —
-    its bench number keeps measuring the full discovery pipeline.
-    Same (session, corpus) eviction idiom as _SHINGLE_MEMO."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _JACCARD_PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for old_key, frame in list(_JACCARD_PAIRS_MEMO.items()):
-        if old_key[0] == key[0]:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-        del _JACCARD_PAIRS_MEMO[old_key]
-    pairs = dedup_ngram_jaccard(spark, sf_dir).cache()
-    _JACCARD_PAIRS_MEMO[key] = pairs
-    return pairs
+    """The thresholded Jaccard pair set (doc_a, doc_b), cached through
+    ``session_memo`` for the DOWNSTREAM consumers — connected
+    components, the LSH recall audit (three aggregates over one pair
+    set), PageRank. Persist only what is reused and cheaper cached
+    than recomputed: each consumer previously re-ran budgeted
+    discovery + exact verification over the (already cached) shingle
+    table per action; the pair set is strictly smaller than the
+    shingle table the session already pins (near-dup pairs are a
+    corpus fraction), so caching it is the cheaper side of that trade
+    at any scale. The registered dedup_ngram_jaccard entry itself
+    stays uncached — its bench number keeps measuring the full
+    discovery pipeline."""
+    return session_memo(
+        spark,
+        sf_dir,
+        "jaccard_pairs",
+        lambda: dedup_ngram_jaccard(spark, sf_dir).cache(),
+    )
 
 
 def _jaccard_budgeted_pairs(sh: DataFrame) -> DataFrame:
@@ -1569,37 +1532,23 @@ def text_detect_language_learned(
     return _langid_learned_frame(spark, sf_dir)
 
 
-#: one live (applicationId, sf_dir) -> cached learned-detector frame
-#: (doc_id, lang, detected — doc-scale, 3 narrow columns); the next
-#: different corpus evicts + unpersists (the _SHINGLE_MEMO idiom)
-_LANGID_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _langid_learned_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned-detector frame cached for its DOWNSTREAM composite
-    consumers — the agreement contract, the learned funnel, and the
-    curation marquee each re-ran the full gram pass (corpus explode +
-    weight join + doc aggregate) per action. r13 OPTIMIZATION (guide
-    §5 — persist what is reused and cheaper cached than recomputed):
-    the detector's OUTPUT is 3 narrow columns per doc, far smaller
-    than the gram stream that builds it. The registered standalone
-    entry (text_detect_language_learned) stays uncached — its bench
-    number keeps measuring the full serving pipeline. Same (session,
-    corpus) eviction idiom as _SHINGLE_MEMO."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LANGID_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for old_key, frame in list(_LANGID_MEMO.items()):
-        if old_key[0] == key[0]:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-        del _LANGID_MEMO[old_key]
-    det = _langid_learned_frame(spark, sf_dir).cache()
-    _LANGID_MEMO[key] = det
-    return det
+    """The learned-detector frame (doc_id, lang, detected — doc-scale,
+    3 narrow columns) cached through ``session_memo`` for its
+    DOWNSTREAM composite consumers — the agreement contract, the
+    learned funnel, and the curation marquee each re-ran the full gram
+    pass (corpus explode + weight join + doc aggregate) per action.
+    Persist what is reused and cheaper cached than recomputed: the
+    detector's OUTPUT is far smaller than the gram stream that builds
+    it. The registered standalone entry (text_detect_language_learned)
+    stays uncached — its bench number keeps measuring the full serving
+    pipeline."""
+    return session_memo(
+        spark,
+        sf_dir,
+        "langid_learned",
+        lambda: _langid_learned_frame(spark, sf_dir).cache(),
+    )
 
 
 #: agreement floor for the learned-vs-heuristic contract: measured
@@ -4160,31 +4109,21 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(merges, "rank long, pair string, n long")
 
 
-#: one live (applicationId, sf_dir) -> learned merge list. The merge
-#: list is MODEL-scale driver state (BPE_ROUNDS tuples), so unlike the
-#: frame memos there is nothing to unpersist — superseded entries just
-#: drop out of the dict.
-_BPE_MERGES_MEMO: dict[tuple[str, str], list] = {}
-
-
 def _bpe_merges_shared(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, int]]:
-    """The trained merge list, cached for DOWNSTREAM consumers
-    (text_bpe_apply composes train + apply; a session that just
-    trained naturally reuses the model). r13 OPTIMIZATION (guide §5):
-    the trainer is a BPE_ROUNDS-job iterative loop — recomputing a
-    model-scale list per action is pure waste. The standalone trainer
-    entry (text_bpe_train) keeps calling learn_bpe_merges directly so
-    its bench number keeps measuring the full training loop."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MERGES_MEMO.get(key)
-    if hit is not None:
-        return hit
-    _BPE_MERGES_MEMO.clear()
-    merges = learn_bpe_merges(spark, sf_dir)
-    _BPE_MERGES_MEMO[key] = merges
-    return merges
+    """The trained merge list, kept through ``session_memo`` for
+    DOWNSTREAM consumers (text_bpe_apply composes train + apply; a
+    session that just trained naturally reuses the model). The trainer
+    is a BPE_ROUNDS-job iterative loop — recomputing a model-scale
+    list per action is pure waste. The list is driver state, so
+    eviction just drops it (nothing to unpersist). The standalone
+    trainer entry (text_bpe_train) keeps calling learn_bpe_merges
+    directly so its bench number keeps measuring the full training
+    loop."""
+    return session_memo(
+        spark, sf_dir, "bpe_merges", lambda: learn_bpe_merges(spark, sf_dir)
+    )
 
 
 def learn_bpe_merges(

@@ -10,8 +10,10 @@ sized to the machine instead of the 200-partition default.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 
@@ -106,7 +108,8 @@ def quiet_bounded_window_warns(spark: SparkSession) -> None:
             "org.apache.spark.sql.execution.window.WindowExec",
             jvm.org.apache.logging.log4j.Level.ERROR,
         )
-    except Exception:
-        # best-effort: a connect-mode or differently-logged deployment
-        # just keeps the warning
-        pass
+    except Py4JError as exc:
+        # a differently-logged deployment just keeps the warning
+        logging.getLogger(__name__).warning(
+            "WindowExec log level left unchanged: %s", exc
+        )

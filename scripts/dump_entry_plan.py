@@ -1,8 +1,8 @@
 """Dump ``explain("formatted")`` for named registry entries into
-$SPARK_GRAFT_PLANS_DIR/<entry>_<tag>.txt (default plans/r14) — the before/after plan evidence for the
-optimization rounds.
+<out_dir>/<entry>_<tag>.txt — the before/after plan evidence for an
+optimization (e.g. out_dir ``plans/r15``, tag ``before`` / ``after``).
 
-Usage: python scripts/dump_entry_plan.py <tag> <sf_dir> <entry> [...]
+Usage: python scripts/dump_entry_plan.py <out_dir> <tag> <sf_dir> <entry> [...]
 """
 
 from __future__ import annotations
@@ -14,8 +14,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag, sf_dir = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
+    if len(sys.argv) < 5:
+        sys.exit(__doc__)
+    outdir, tag, sf_dir = sys.argv[1:4]
+    names = sys.argv[4:]
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.plans import (
         explain_str,
     )
@@ -29,7 +31,6 @@ def main() -> None:
 
     spark = get_spark(app_name="dump-entry-plan")
     quiet_bounded_window_warns(spark)
-    outdir = os.environ.get("SPARK_GRAFT_PLANS_DIR", "plans/r14")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = REGISTRY[name].run(spark, sf_dir)
