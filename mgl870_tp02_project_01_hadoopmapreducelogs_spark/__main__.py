@@ -25,7 +25,17 @@ semantics (process_logs_v10.py:39-40,120): the persisted catalog is
 read, merged with this run's mining, written back, and the REPORTED
 matrix carries the accumulated sizes — exactly how the reference's
 golden CSV sizes grow run over run (BASELINE.md: 1,984,400 →
-6,716,120 over the same corpus).
+6,716,120 over the same corpus). The failure totals are this run's
+occurrences, keyed by the reported catalog's ids.
+
+The default run (``--method exact``, also ``drainish``) reads the lines
+once: nothing line-level is cached, so column pruning drops the per-file
+line numbering and the unused field regexes, and the catalog is one
+scan → mask → aggregate. Everything after is catalog-sized: the line
+count is Σ size, the file count comes from the scan's file listing, and
+the per-event totals (the column sums of the event matrix) are the
+template sizes. ``--method drain`` (fit, then match) and ``--ml`` (the
+line-level occurrences) read the parsed lines twice and cache them.
 """
 
 from __future__ import annotations
@@ -60,6 +70,24 @@ def _global_line_order(parsed: DataFrame) -> DataFrame:
         *[F.lit(x) for kv in offsets.items() for x in kv]
     )[F.col("file")]
     return numbered.withColumn("_line_idx", F.col("_rn") + off_col).drop("_rn")
+
+
+def _to_reported_ids(
+    df: DataFrame, run_catalog: DataFrame, reported: DataFrame
+) -> DataFrame:
+    """Re-key ``df`` from this run's cluster ids to the reported
+    (``--state``-accumulated) catalog's ids, joining the two catalogs on
+    template — a catalog-sized map. Lines with no id keep NULL."""
+    if reported is run_catalog:
+        return df
+    ids = run_catalog.select("cluster_id", "template").join(
+        reported.select("template", F.col("cluster_id").alias("_rid")), "template"
+    )
+    return (
+        df.join(F.broadcast(ids.drop("template")), "cluster_id", "left")
+        .withColumn("cluster_id", F.col("_rid"))
+        .drop("_rid")
+    )
 
 
 def _csv_single_file(df: DataFrame, path: str) -> None:
@@ -118,10 +146,11 @@ def run(argv: list[str] | None = None) -> int:
     if args.stream:
         return _run_stream(spark, args)
 
-    parsed = logs.parse_lines(logs.read_log_dir(spark, args.logs_dir)).cache()
-    n_lines = parsed.count()
-    n_files = parsed.select("file").distinct().count()
-    print(f"[ingest] {n_lines} lines from {n_files} container_*.log files")
+    raw = logs.read_log_dir(spark, args.logs_dir)
+    parsed = logs.parse_lines(raw)
+    if args.method == "drain" or args.ml:
+        # read twice: drain fits then matches, --ml pivots the line-level occ
+        parsed = parsed.cache()
 
     if args.method == "drain":
         catalog = drain.fit_distributed(parsed)
@@ -130,30 +159,43 @@ def run(argv: list[str] | None = None) -> int:
     else:
         catalog, occ = matrix.pipeline(parsed, method=args.method)
     catalog = catalog.cache()
+    # Σ size = line count for every method; the listing already counted files
+    n_lines = catalog.agg(F.sum("size")).first()[0] or 0
+    print(f"[ingest] {n_lines} lines from {len(raw.inputFiles())} "
+          "container_*.log files")
 
+    reported = catalog
     if args.state:
         cat_path = os.path.join(args.state, "catalog")
         if os.path.isdir(cat_path):
             old = sinks.read_catalog(spark, cat_path)
             # localCheckpoint: materialize BEFORE overwriting the very
             # parquet files the accumulation lazily reads from
-            catalog = sinks.accumulate_catalog(old, catalog).localCheckpoint()
+            reported = sinks.accumulate_catalog(old, catalog).localCheckpoint()
             print(f"[state] accumulated with persisted catalog at {cat_path}")
-        sinks.write_catalog(catalog, cat_path)
+        sinks.write_catalog(reported, cat_path)
         print(f"[state] catalog persisted to {cat_path}")
 
     stamp = datetime.now().strftime("%Y%m%d%I%M%p")
     matrix_path = os.path.join(args.out, f"event_matrix_exec{stamp}.csv")
     _csv_single_file(
-        matrix.summary_matrix(catalog, reference_names=True), matrix_path
+        matrix.summary_matrix(reported, reference_names=True), matrix_path
     )
-    n_events = catalog.count()
+    n_events = reported.count()
     print(f"[matrix] {n_events} events -> {matrix_path}")
 
-    counts = matrix.event_counts(occ).cache()
+    # exact and drainish match every line to its own template, so the
+    # per-event totals ARE the template sizes; drain can leave lines unmatched
+    if args.method == "drain":
+        counts = matrix.event_counts(occ)
+    else:
+        counts = catalog.select(
+            "cluster_id", F.col("size").cast("double").alias("total")
+        )
+    counts = _to_reported_ids(counts, catalog, reported).cache()
     failures = matrix.failure_events(counts)
     print("[stats] failure-event distribution (events with occurrences > 0):")
-    for r in failures.orderBy(F.desc("total")).collect():
+    for r in failures.orderBy(F.desc("total"), "cluster_id").collect():
         print(f"    Event_{r.cluster_id}: {int(r.total)}")
     chart = viz.failure_distribution_data(counts)
     chart_path = os.path.join(args.out, "failure_distribution.csv")
@@ -161,7 +203,7 @@ def run(argv: list[str] | None = None) -> int:
     print(f"[viz] chart data -> {chart_path}")
 
     if args.ml:
-        _run_ml(spark, parsed, catalog, occ, args)
+        _run_ml(reported, _to_reported_ids(occ, catalog, reported), args)
 
     spark.catalog.clearCache()
     return 0
@@ -210,7 +252,7 @@ def _run_stream(spark, args) -> int:
     return 0
 
 
-def _run_ml(spark, parsed: DataFrame, catalog: DataFrame, occ: DataFrame, args) -> None:
+def _run_ml(catalog: DataFrame, occ: DataFrame, args) -> None:
     """Windowed failure-prediction analytics (process_logs_v10.py:220-447):
     wide one-hot → correlation pruning (>0.7) → 5-row tumbling windows
     (sum X / max y) → 60/20/20 stratified split → LR + RF metrics &

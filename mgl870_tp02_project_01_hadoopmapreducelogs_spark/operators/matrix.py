@@ -87,9 +87,12 @@ def pipeline(parsed: DataFrame, method: str = "exact"):
     """End-to-end: parsed lines → (catalog, long occurrences).
 
     The reference's two-pass fit-then-match lifecycle
-    (process_logs.py:27-87) collapsed into one declarative plan; Spark
-    caches nothing implicitly, so callers iterating on both outputs
-    should ``.cache()`` the parsed input.
+    (process_logs.py:27-87) collapsed into one declarative plan. Both
+    outputs are lazy: a caller that only needs the catalog reads the
+    lines once (its per-event totals are the catalog sizes). Cache the
+    parsed input only when the line-level occurrences are consumed as
+    well as the catalog — otherwise the cache keeps every parsed column
+    and defeats the column pruning that drops line numbering.
     """
     if method == "exact":
         catalog = mining.mine_exact(parsed)

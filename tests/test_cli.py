@@ -31,13 +31,15 @@ def _matrix_rows(out_dir):
     return rows
 
 
-def test_cli_mines_and_accumulates_state(spark, tmp_path):
+def test_cli_mines_and_accumulates_state(spark, tmp_path, capsys):
     corpus = tmp_path / "logs"
     _write_corpus(corpus)
     out1, out2 = tmp_path / "out1", tmp_path / "out2"
     state = tmp_path / "state"
 
     assert run([str(corpus), "--out", str(out1), "--state", str(state)]) == 0
+    # the decoy is never listed; counts come from the catalog and listing
+    assert "[ingest] 120 lines from 2 container_*.log files" in capsys.readouterr().out
     rows1 = _matrix_rows(out1)
     # reference golden header (event_matrix_exec202411230733PM.csv:1)
     assert set(rows1[0]) == {"Cluster ID", "Size", "Template"}
@@ -52,6 +54,40 @@ def test_cli_mines_and_accumulates_state(spark, tmp_path):
     assert {r["Template"] for r in rows2} == {r["Template"] for r in rows1}
     # chart data extracted at the viz edge
     assert (out2 / "failure_distribution.csv").exists()
+
+
+def test_cli_other_methods_count_lines_from_catalog(spark, tmp_path, capsys):
+    """drainish and drain report the same line count (Σ size of their
+    catalogs) and their failure totals cover every line of this corpus."""
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    for method in ("drainish", "drain"):
+        out = tmp_path / method
+        assert run([str(corpus), "--out", str(out), "--method", method]) == 0
+        assert "[ingest] 120 lines from 2 container_*.log files" in capsys.readouterr().out
+        assert sum(int(r["Size"]) for r in _matrix_rows(out)) == 120
+        with open(out / "failure_distribution.csv") as f:
+            assert sum(float(r["total"]) for r in csv.DictReader(f)) == 120.0
+
+
+def test_cli_state_failure_totals_use_reported_ids(spark, tmp_path):
+    """Under --state the failure totals are this run's occurrences, keyed
+    by the accumulated catalog's ids — the same ids the matrix CSV shows."""
+    state = tmp_path / "state"
+    for name, msg, n in (("alpha", "Alpha started", 5), ("beta", "Beta stopped", 7)):
+        app = tmp_path / name
+        app.mkdir()
+        (app / "container_0001_01_000001.log").write_text("".join(
+            f"2024-11-20 13:00:{i:02d},000 INFO [main] a.b.C: {msg}\n" for i in range(n)
+        ))
+        out = tmp_path / f"out_{name}"
+        assert run([str(app), "--out", str(out), "--state", str(state)]) == 0
+    assert [(r["Cluster ID"], r["Size"], r["Template"]) for r in _matrix_rows(out)] == [
+        ("1", "5", "Alpha started"),
+        ("2", "7", "Beta stopped"),
+    ]
+    with open(out / "failure_distribution.csv") as f:
+        assert list(csv.reader(f)) == [["cluster_id", "total"], ["2", "7.0"]]
 
 
 def test_cli_stream_incremental_catchup(spark, tmp_path):

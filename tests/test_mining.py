@@ -62,14 +62,16 @@ def test_drainish_generalizes_with_wildcards(spark, log_dir):
 
 def test_match_lines_assigns_every_line(spark, log_dir):
     parsed = _parsed(spark, log_dir)
-    catalog, occ = matrix.pipeline(parsed, method="exact")
-    # every line maps to exactly one event id (SURVEY §5.2 property)
-    assert occ.filter(F.col("cluster_id").isNull()).count() == 0
-    assert occ.count() == parsed.count()
-    # event_counts == catalog sizes
-    counts = {r.cluster_id: r.total for r in matrix.event_counts(occ).collect()}
-    sizes = {r.cluster_id: float(r.size) for r in catalog.collect()}
-    assert counts == sizes
+    for method in ("exact", "drainish"):
+        catalog, occ = matrix.pipeline(parsed, method=method)
+        # every line maps to exactly one event id (SURVEY §5.2 property)
+        assert occ.filter(F.col("cluster_id").isNull()).count() == 0
+        assert occ.count() == parsed.count()
+        # event_counts == catalog sizes: the CLI reads its per-event
+        # totals off the catalog on the strength of this
+        counts = {r.cluster_id: r.total for r in matrix.event_counts(occ).collect()}
+        sizes = {r.cluster_id: float(r.size) for r in catalog.collect()}
+        assert counts == sizes, method
 
 
 def test_match_unseen_line_gets_null(spark, log_dir):

@@ -2,6 +2,8 @@
 survive a 100×/1000× scale-up (SURVEY §4.2). These are the engine's
 'optimizer tests' — Catalyst does the work; we pin the outcomes."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.plans import plan_report
@@ -9,7 +11,9 @@ from mgl870_tp02_project_01_hadoopmapreducelogs_spark.plans.audit import (
     executed_plan_str,
     explain_str,
 )
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import mining
 from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries import REGISTRY
+from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import logs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,6 +46,24 @@ def test_mining_has_no_python_in_hot_path(spark):
     # the executed (AQE-final) plan must show whole-stage codegen:
     # stages print as '*(N) Operator' in the final-plan string
     assert "*(" in executed_plan_str(df)
+
+
+def test_default_mining_reads_the_lines_once(spark, tmp_path):
+    """The default CLI's catalog (exact mining, parsed lines not cached)
+    must plan as one text scan -> mask -> partial agg -> exchange.
+    Caching the parsed lines, or making the catalog depend on line_no,
+    brings back the per-file row_number window and its full-row shuffle.
+    A fresh directory keeps other tests' cached plans from matching."""
+    for c in range(2):
+        (tmp_path / f"container_{c}.log").write_text(
+            "".join(f"2024-11-20 13:00:{i:02d},000 INFO [main] a.b.C: Task {i} done\n"
+                    for i in range(20))
+        )
+    df = mining.mine_exact(logs.parse_lines(logs.read_log_dir(spark, str(tmp_path))))
+    final = executed_plan_str(df).split("== Initial Plan ==")[0]
+    assert final.count("FileScan text") == 1, final
+    assert not re.search(r"Window \[.*\], \[file#\d+\]", final), final
+    assert "InMemoryTableScan" not in final, final
 
 
 def test_agg_uses_hash_aggregate(spark):
