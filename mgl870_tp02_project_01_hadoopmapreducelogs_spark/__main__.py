@@ -8,7 +8,7 @@ contract on the Spark engine:
 
     python -m mgl870_tp02_project_01_hadoopmapreducelogs_spark LOGS_DIR \
         --out out/ [--method exact|drainish|drain] [--state state_dir] \
-        [--ml --target-event N] [--window-size 5]
+        [--ml --target-event N] [--window-size 5] [--stream]
 
 Outputs land in ``--out``:
   event_matrix_exec<timestamp>.csv   reference-named summary matrix
@@ -36,6 +36,15 @@ count is Σ size, the file count comes from the scan's file listing, and
 the per-event totals (the column sums of the event matrix) are the
 template sizes. ``--method drain`` (fit, then match) and ``--ml`` (the
 line-level occurrences) read the parsed lines twice and cache them.
+
+``--stream`` (requires ``--state``) is the incremental form of the
+exact run: a Structured Streaming ``availableNow`` catch-up reads only
+the ``container_*.log`` files its checkpoint has not seen, through the
+batch parser and template count, and folds them into the persisted
+running counts. The matrix is that accumulated catalog, built by the
+batch catalog builder — so a first ``--stream`` run over a fresh state
+writes the same matrix as a default run over the same logs. It writes
+no failure totals and no ML outputs.
 """
 
 from __future__ import annotations
@@ -45,19 +54,18 @@ import os
 import sys
 from datetime import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def _global_line_order(parsed: DataFrame) -> DataFrame:
     """Total line order (file, line_no) → one numeric ``_line_idx``.
 
-    Per-file row_number (shuffle as wide as the file count) plus
-    driver-computed cumulative file offsets — file COUNT is small even
-    when files are not; no single-partition sort.
+    ``line_no`` is already dense 1..n per file, so the global index is
+    ``line_no`` plus the driver-computed cumulative size of the files
+    before it — file COUNT is small even when files are not; no window,
+    no single-partition sort.
     """
-    w = Window.partitionBy("file").orderBy("line_no")
-    numbered = parsed.withColumn("_rn", F.row_number().over(w))
     sizes = sorted(
         (r["file"], r["n"])
         for r in parsed.groupBy("file").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -69,7 +77,7 @@ def _global_line_order(parsed: DataFrame) -> DataFrame:
     off_col = F.create_map(
         *[F.lit(x) for kv in offsets.items() for x in kv]
     )[F.col("file")]
-    return numbered.withColumn("_line_idx", F.col("_rn") + off_col).drop("_rn")
+    return parsed.withColumn("_line_idx", F.col("line_no") + off_col)
 
 
 def _to_reported_ids(
@@ -214,11 +222,14 @@ def _run_stream(spark, args) -> int:
 
     The file-source checkpoint remembers which ``container_*.log``
     files earlier runs consumed; ``availableNow`` processes exactly the
-    new ones, the state store carries running (template, size) counts
-    across runs (the distributed drain3_state.bin), and the complete-
-    mode sink overwrites the persisted catalog with the full updated
-    view. Repeated runs over an unchanged directory are no-ops.
+    new ones through the batch parser and template count, the state
+    store carries running (template, size) counts across runs (the
+    distributed drain3_state.bin), and the complete-mode sink overwrites
+    the persisted catalog with the full updated view. The matrix is the
+    batch catalog built from it. Repeated runs over an unchanged
+    directory are no-ops.
     """
+    from .operators import matrix, mining
     from .streaming import mining_stream as ms
 
     catalog_path = os.path.join(args.state, "stream_catalog")
@@ -229,26 +240,14 @@ def _run_stream(spark, args) -> int:
         templates, catalog_path, checkpoint, mode="complete", available_now=True
     )
     q.awaitTermination()
-    # dense ids at the export edge — catalog-sized input, same idiom as
-    # mining._rank_templates (single-partition sort over ≤ #templates rows)
-    cat = spark.read.parquet(catalog_path).withColumn(
-        "cluster_id", F.row_number().over(Window.orderBy("template"))
-    )
+    cat = mining.build_catalog(spark.read.parquet(catalog_path)).cache()
     stamp = datetime.now().strftime("%Y%m%d%I%M%p")
     matrix_path = os.path.join(args.out, f"event_matrix_exec{stamp}.csv")
-    _csv_single_file(
-        cat.select(
-            F.col("cluster_id").alias("Cluster ID"),
-            F.col("size").alias("Size"),
-            F.col("template").alias("Template"),
-        ),
-        matrix_path,
-    )
-    rows = spark.read.parquet(catalog_path).agg(
-        F.count(F.lit(1)), F.sum("size")
-    ).first()
+    _csv_single_file(matrix.summary_matrix(cat, reference_names=True), matrix_path)
+    rows = cat.agg(F.count(F.lit(1)), F.sum("size")).first()
     print(f"[stream] catalog: {rows[0]} templates, {rows[1]} lines total "
           f"(accumulated across runs) -> {matrix_path}")
+    spark.catalog.clearCache()
     return 0
 
 

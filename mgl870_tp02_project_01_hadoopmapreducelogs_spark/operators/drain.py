@@ -60,10 +60,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MASK = "<*>"
+from ..functions.preprocess import MASK_TOKEN
+from .mining import build_catalog
 
 
 class _Cluster:
@@ -81,7 +82,7 @@ class DrainMiner:
     ``depth`` counts internal levels: root → token-count → first
     ``depth-2`` tokens → leaf cluster list (reference knob
     tree_max_depth=4, drain3.ini). Numeric-looking tokens route through
-    ``MASK`` branches so ids don't explode the tree (paper §III.B).
+    ``MASK_TOKEN`` branches so ids don't explode the tree (paper §III.B).
     """
 
     def __init__(self, depth: int = 4, sim_th: float = 0.4, max_clusters: int = 10000):
@@ -96,7 +97,7 @@ class DrainMiner:
 
     @staticmethod
     def _branch_token(tok: str) -> str:
-        return MASK if any(ch.isdigit() for ch in tok) else tok
+        return MASK_TOKEN if any(ch.isdigit() for ch in tok) else tok
 
     def _leaf(self, tokens: list[str], create: bool) -> list[_Cluster] | None:
         node = self.root
@@ -142,7 +143,7 @@ class DrainMiner:
         sim = 0
         params = 0
         for x, y in zip(tpl, msg):
-            if x == MASK:
+            if x == MASK_TOKEN:
                 params += 1
             elif x == y:
                 sim += 1
@@ -155,7 +156,9 @@ class DrainMiner:
         catalog)."""
         if len(tpl) != len(msg) or not tpl:
             return 0.0
-        same = sum(1 for x, y in zip(tpl, msg) if x == y or x == MASK or y == MASK)
+        same = sum(
+            1 for x, y in zip(tpl, msg) if x == y or MASK_TOKEN in (x, y)
+        )
         return same / len(tpl)
 
     # -- fit -------------------------------------------------------------------
@@ -171,7 +174,7 @@ class DrainMiner:
                 best, best_sim, best_params = cl, s, p
         if best is not None and best_sim >= self.sim_th:
             best.tokens = [
-                x if x == y else MASK for x, y in zip(best.tokens, tokens)
+                x if x == y else MASK_TOKEN for x, y in zip(best.tokens, tokens)
             ]
             best.size += count
             return best.idx
@@ -183,11 +186,21 @@ class DrainMiner:
                 best.size += count
                 return best.idx
             if self._overflow is None:
-                self._overflow = _Cluster([MASK], 0, idx=len(self.clusters))
+                self._overflow = _Cluster([MASK_TOKEN], 0, idx=len(self.clusters))
                 self.clusters.append(self._overflow)
             self._overflow.size += count
             return self._overflow.idx
-        cl = _Cluster(list(tokens), count, idx=len(self.clusters))
+        return self._append(leaf, tokens, count)
+
+    def seed(self, template: str, size: int) -> int:
+        """Restore one persisted cluster as it is — appended to its
+        leaf, never similarity-merged (``add`` would merge clusters the
+        saved state kept apart); returns the cluster index."""
+        tokens = self._tokens(template)
+        return self._append(self._leaf(tokens, create=True), tokens, size)
+
+    def _append(self, leaf: list[_Cluster], tokens: list[str], size: int) -> int:
+        cl = _Cluster(tokens, size, idx=len(self.clusters))
         leaf.append(cl)
         self.clusters.append(cl)
         return cl.idx
@@ -235,7 +248,8 @@ def fit_distributed(
 ) -> DataFrame:
     """Fit Drain at scale: per-partition miners → driver merge.
 
-    Returns the catalog ``(cluster_id, size, template)``. The partition
+    Returns the catalog ``(cluster_id, size, template, template_hash)``
+    (``mining.build_catalog``). The partition
     stage reduces each partition to its local template summaries, so
     driver traffic is O(partitions × templates-per-partition), never
     O(lines). When the distinct-template table itself is small
@@ -261,8 +275,6 @@ def fit_distributed(
     above the largest expected distinct count (always single-fit)
     rather than relying on the data-dependent cutover.
     """
-    from pyspark.sql import functions as F
-
     spark = parsed.sparkSession
 
     def fit_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -305,10 +317,8 @@ def fit_distributed(
     agg: dict[str, int] = {}
     for t, size in merged.templates():
         agg[t] = agg.get(t, 0) + size
-    catalog = sorted(agg.items())
-    return spark.createDataFrame(
-        [(i + 1, size, t) for i, (t, size) in enumerate(catalog)],
-        "cluster_id long, size long, template string",
+    return build_catalog(
+        spark.createDataFrame(list(agg.items()), "template string, size long")
     )
 
 

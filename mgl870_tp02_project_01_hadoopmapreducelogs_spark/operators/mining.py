@@ -1,4 +1,4 @@
-"""T1-T4 — log template mining, the reference's defining operator.
+"""T1-T3 — log template mining, the reference's defining operator.
 
 The reference mines templates with Drain3's *online* clustering
 (``template_miner.add_log_message``, process_logs_v10.py:59-81; knobs
@@ -26,6 +26,9 @@ Cluster ids are dense 1-based ints like the reference's
 bounded by max-distinct-templates) template catalog — never by ranking
 lines. ``template_hash`` (sha2 of the template) is the scale-path
 stable id: identical across runs/clusters without any global ordering.
+Every catalog — batch, ``--state`` accumulation, the streaming
+catch-up's export and the faithful Drain fit — is built by
+``build_catalog``.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-MASK_TOKEN = "<*>"
+from ..functions.preprocess import MASK_TOKEN
 
 
 def _rank_templates(templates: DataFrame) -> DataFrame:
@@ -55,6 +58,32 @@ def _rank_templates(templates: DataFrame) -> DataFrame:
     return templates.withColumn("cluster_id", F.row_number().over(w).cast("long"))
 
 
+def _catalog_columns(ranked: DataFrame) -> DataFrame:
+    """The catalog shape ``(cluster_id, size, template, template_hash)``."""
+    return ranked.select(
+        "cluster_id",
+        "size",
+        "template",
+        F.sha2(F.col("template"), 256).alias("template_hash"),
+    )
+
+
+def build_catalog(templates: DataFrame) -> DataFrame:
+    """The template catalog of ``(template, size)`` rows, one row per
+    template: dense ids in template order plus the template hash."""
+    return _catalog_columns(_rank_templates(templates))
+
+
+def template_counts(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
+    """``(template, size)``: the masked message IS the template. One
+    shuffle keyed by template with map-side partial counts; as a
+    streaming aggregation its state store carries the sizes across
+    triggers the way drain3_state.bin carried cluster sizes across runs."""
+    return parsed.groupBy(F.col(masked_col).alias("template")).agg(
+        F.count(F.lit(1)).alias("size")
+    )
+
+
 def mine_exact(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
     """T1(a) — exact masked-message dedup mining (canonical).
 
@@ -62,16 +91,7 @@ def mine_exact(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
     template_hash)``. Equivalent oracle SQL: ``SELECT masked AS
     template, count(*) AS size FROM parsed GROUP BY masked``.
     """
-    templates = (
-        parsed.groupBy(F.col(masked_col).alias("template"))
-        .agg(F.count(F.lit(1)).alias("size"))
-    )
-    return _rank_templates(templates).select(
-        "cluster_id",
-        "size",
-        "template",
-        F.sha2(F.col("template"), 256).alias("template_hash"),
-    )
+    return build_catalog(template_counts(parsed, masked_col))
 
 
 def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
@@ -133,15 +153,9 @@ def drainish_mapping(parsed: DataFrame, masked_col: str = "masked") -> DataFrame
 def mine_drainish(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
     """T1(b) catalog: ``(cluster_id, size, template, template_hash)``."""
     mapping = drainish_mapping(parsed, masked_col)
-    return (
-        mapping.groupBy("cluster_id", "template")
-        .agg(F.sum("size").alias("size"))
-        .select(
-            "cluster_id",
-            "size",
-            "template",
-            F.sha2(F.col("template"), 256).alias("template_hash"),
-        )
+    # ids already ranked inside the mapping: only the projection is shared
+    return _catalog_columns(
+        mapping.groupBy("cluster_id", "template").agg(F.sum("size").alias("size"))
     )
 
 
@@ -177,7 +191,3 @@ def new_templates(old_catalog: DataFrame, new_catalog: DataFrame) -> DataFrame:
         old_catalog.select("template"), on="template", how="left_anti"
     )
 
-
-def cluster_census(catalog: DataFrame) -> int:
-    """T4 — running count of clusters (process_logs_v10.py:81)."""
-    return catalog.count()

@@ -359,7 +359,9 @@ def t1c_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import drain
 
     parsed = _masked(spark, sf_dir)
-    return drain.fit_distributed(parsed, depth=4, sim_th=0.4)
+    return drain.fit_distributed(parsed, depth=4, sim_th=0.4).select(
+        "cluster_id", "size", "template"
+    )
 
 
 @register(

@@ -12,29 +12,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.preprocess import MASK_TOKEN
 from ..operators import multimodal
-from . import load, register, session_memo
+from ..streaming import mining_stream
+from ..streaming.mining_stream import run_to_memory
+from . import load, load_events_stream, register, session_memo
 from .textops import NORM_SQL
 
-_SINK_N = 0
 
-
-def _run_stream(stream_df, query_name: str, mode: str = "complete") -> DataFrame:
-    global _SINK_N
-    _SINK_N += 1
-    name = f"{query_name}_{_SINK_N}"
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
+def _masked_event():
+    """The log-stream entries' mining key: ``event_type || ' user=' ||
+    user_id`` with its numbers masked, as column ``masked``."""
+    msg = F.concat(
+        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    return F.regexp_replace(msg, r"\b\d+\b", MASK_TOKEN).alias("masked")
+
+
+def _masked_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a stream of masked messages (``masked``)."""
+    return load_events_stream(spark, sf_dir).select(_masked_event())
 
 
 @register(
@@ -51,8 +48,6 @@ def _run_stream(stream_df, query_name: str, mode: str = "complete") -> DataFrame
     "date_trunc).",
 )
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load_events_stream
-
     stream = (
         load_events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -62,7 +57,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 1000)).alias("sum_value"),
         )
     )
-    out = _run_stream(stream, "hourly_counts")
+    out = run_to_memory(stream, "hourly_counts")
     return out.select(F.col("w.start").alias("hour_start"), "n", "sum_value")
 
 
@@ -80,18 +75,8 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch-SQL oracle proves parity.",
 )
 def streaming_template_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load_events_stream
-
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    stream = (
-        load_events_stream(spark, sf_dir)
-        .select(F.regexp_replace(msg, r"\b\d+\b", "<*>").alias("template"))
-        .groupBy("template")
-        .agg(F.count(F.lit(1)).alias("size"))
-    )
-    return _run_stream(stream, "template_mining")
+    stream = mining_stream.mine_templates_stream(_masked_event_stream(spark, sf_dir))
+    return run_to_memory(stream, "template_mining")
 
 
 @register(
@@ -113,21 +98,8 @@ def streaming_template_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(tests/test_streaming.py).",
 )
 def streaming_new_template_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import mining_stream
-    from . import load_events_stream
-
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    stream = load_events_stream(spark, sf_dir).select(
-        F.regexp_replace(msg, r"\b\d+\b", "<*>").alias("masked")
-    )
-    feed = mining_stream.new_template_feed_stream(stream)
-    global _SINK_N
-    _SINK_N += 1
-    return mining_stream.run_to_memory(
-        feed, f"new_template_feed_{_SINK_N}", mode="append"
-    )
+    feed = mining_stream.new_template_feed_stream(_masked_event_stream(spark, sf_dir))
+    return run_to_memory(feed, "new_template_feed", mode="append")
 
 
 @register(
@@ -142,21 +114,8 @@ def streaming_new_template_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "covered (tests/test_streaming.py).",
 )
 def streaming_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import mining_stream
-    from . import load_events_stream
-
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    stream = load_events_stream(spark, sf_dir).select(
-        F.regexp_replace(msg, r"\b\d+\b", "<*>").alias("masked")
-    )
-    feed = mining_stream.drain_mining_stream(stream)
-    global _SINK_N
-    _SINK_N += 1
-    emissions = mining_stream.run_to_memory(
-        feed, f"drain_stream_{_SINK_N}", mode="append"
-    )
+    feed = mining_stream.drain_mining_stream(_masked_event_stream(spark, sf_dir))
+    emissions = run_to_memory(feed, "drain_stream", mode="append")
     return mining_stream.latest_drain_catalog(emissions)
 
 
@@ -178,20 +137,8 @@ def streaming_drain_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows-only verdict into a value-checked one.",
 )
 def streaming_drain_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import mining_stream
-    from . import load, load_events_stream
-
-    msg = F.concat(
-        F.col("event_type"), F.lit(" user="), F.col("user_id").cast("string")
-    )
-    masked = F.regexp_replace(msg, r"\b\d+\b", "<*>")
-    stream = load_events_stream(spark, sf_dir).select(masked.alias("masked"))
-    feed = mining_stream.drain_mining_stream(stream)
-    global _SINK_N
-    _SINK_N += 1
-    emissions = mining_stream.run_to_memory(
-        feed, f"drain_inv_{_SINK_N}", mode="append"
-    )
+    feed = mining_stream.drain_mining_stream(_masked_event_stream(spark, sf_dir))
+    emissions = run_to_memory(feed, "drain_inv", mode="append")
     catalog = mining_stream.latest_drain_catalog(emissions)
     n_clusters = catalog.count()
     # DELIBERATELY un-spread (r12 wave 2 static-side audit): the
@@ -199,12 +146,7 @@ def streaming_drain_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 AND 10x read a wash (2.4-2.7 vs 2.5-2.6s; 4.0-5.3 vs
     # 3.5-5.5s), because the static side is one cheap regex + a
     # map-side-combined distinct, not a signature chain.
-    n_distinct = (
-        load(spark, sf_dir, "events")
-        .select(masked.alias("masked"))
-        .distinct()
-        .count()
-    )
+    n_distinct = load(spark, sf_dir, "events").select(_masked_event()).distinct().count()
     return catalog.agg(
         F.sum("size").cast("long").alias("total_size")
     ).withColumn("catalog_within_band", F.lit(1 <= n_clusters <= n_distinct))
@@ -225,15 +167,13 @@ def streaming_drain_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     "groupings.",
 )
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load_events_stream
-
     stream = (
         load_events_stream(spark, sf_dir)
         .withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_stream(stream, "sliding_counts")
+    out = run_to_memory(stream, "sliding_counts")
     return out.select(F.col("w.start").alias("window_start"), "n")
 
 
@@ -253,8 +193,6 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "segment. Batch SQL oracle proves stream/batch parity.",
 )
 def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load, load_events_stream
-
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     stream = (
         load_events_stream(spark, sf_dir)
@@ -265,7 +203,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_stream(stream, "static_enrichment")
+    out = run_to_memory(stream, "static_enrichment")
     return out.select(
         F.col("w.start").alias("hour_start"), "c_mktsegment", "n"
     )
@@ -287,8 +225,6 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "proves stream/batch parity.",
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load_events_stream
-
     purchases = (
         load_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -316,7 +252,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("v_ts") <= F.col("p_ts")),
         "inner",
     )
-    out = _run_stream(
+    out = run_to_memory(
         joined.select(
             F.col("p_user").alias("user_id"), "purchase_event", "view_event"
         ),
@@ -398,8 +334,6 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     "only the aggregated sessions, never events.",
 )
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load_events_stream
-
     stream = (
         load_events_stream(spark, sf_dir)
         .filter(F.col("user_id") <= 200)
@@ -407,7 +341,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = _run_stream(stream, "session_stream")
+    out = run_to_memory(stream, "session_stream")
     return out.select(
         "user_id", F.col("w.start").alias("session_start"), "n_events"
     )
@@ -1051,7 +985,7 @@ def streaming_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("band"),
     )
     flags = minhash_dedup_stream(keys)
-    out = _run_stream(flags, "image_phash_stream", mode="append")
+    out = run_to_memory(flags, "image_phash_stream", mode="append")
     return out.groupBy("doc_id").agg(F.max("is_dup").alias("is_dup"))
 
 
@@ -1071,15 +1005,13 @@ def streaming_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "non-key columns survive is first-arrival-dependent by design).",
 )
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import load_events_stream
-
     stream = (
         load_events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    out = _run_stream(stream, "dedup_exact_stream", mode="append")
+    out = run_to_memory(stream, "dedup_exact_stream", mode="append")
     return out.distinct()
 
 
@@ -1396,7 +1328,7 @@ def _minhash_dedup_oracle() -> str:
 def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = minhash_bands_rowwise(load_documents_stream(spark, sf_dir))
     flags = minhash_dedup_stream(bands)
-    out = _run_stream(flags, "minhash_dedup_stream", mode="append")
+    out = run_to_memory(flags, "minhash_dedup_stream", mode="append")
     return out.groupBy("doc_id").agg(F.max("is_dup").alias("is_dup"))
 
 
@@ -1514,7 +1446,7 @@ def plant_exact_dups(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def streaming_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted_stream = plant_exact_dups(load_documents_stream(spark, sf_dir))
     fast_bands = minhash_bands_rowwise(planted_stream, family="xxhash64")
-    fast = _run_stream(
+    fast = run_to_memory(
         minhash_dedup_stream(fast_bands), "minhash_fast_stream", mode="append"
     ).groupBy("doc_id").agg(F.max("is_dup").alias("fast_dup"))
 
@@ -1644,7 +1576,7 @@ def streaming_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_seen"),
         )
     )
-    out = _run_stream(stream, "incremental_index", mode="complete")
+    out = run_to_memory(stream, "incremental_index", mode="complete")
     return out
 
 
@@ -1729,7 +1661,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_stream(stream, "late_data_audit", mode="append")
+    out = run_to_memory(stream, "late_data_audit", mode="append")
     return out.select(F.col("w.start").alias("window_start"), "n")
 
 
@@ -1787,4 +1719,4 @@ def streaming_contamination_semantic(
         F.round("max_cos", 4).alias("max_benchmark_cos"),
         (F.col("max_cos") >= SEM_CONTAM_TAU).alias("contaminated"),
     )
-    return _run_stream(scored, "semantic_contam_stream", mode="append")
+    return run_to_memory(scored, "semantic_contam_stream", mode="append")

@@ -22,6 +22,15 @@ from ..functions import preprocess as P
 CONTAINER_GLOB = "container_*.log"
 
 
+def log_reader(reader, glob: str, recursive: bool):
+    """The ``container_*.log`` scan options on a batch ``spark.read`` or
+    a streaming ``spark.readStream`` reader: the filename glob applied
+    at listing time and directory recursion."""
+    return reader.option("recursiveFileLookup", str(recursive).lower()).option(
+        "pathGlobFilter", glob
+    )
+
+
 def read_log_dir(
     spark: SparkSession,
     logs_dir: str,
@@ -35,12 +44,7 @@ def read_log_dir(
     never opened — the distributed analogue of the reference's pre-read
     filter, and it composes with partition pruning on object stores.
     """
-    df = (
-        spark.read.option("recursiveFileLookup", str(recursive).lower())
-        .option("pathGlobFilter", glob)
-        .text(logs_dir)
-    )
-    return _with_line_ids(df)
+    return _with_line_ids(log_reader(spark.read, glob, recursive).text(logs_dir))
 
 
 def read_log_file(spark: SparkSession, path: str) -> DataFrame:
@@ -73,13 +77,14 @@ def parse_lines(raw: DataFrame, mask_rules=None) -> DataFrame:
     One codegen'd projection per row: extract ts/level/thread/logger/
     message (fields the reference strips and discards,
     process_logs_v10.py:48-57) and compute the masked mining key
-    (process_logs_v10.py:24-37). No Python executes per row.
+    (process_logs_v10.py:24-37). No Python executes per row. ``raw``'s
+    own columns pass through first — ``value, file, line_no`` from the
+    batch sources, ``value, file`` from ``read_log_stream`` — so batch
+    and stream share this one parser.
     """
     v = F.col("value")
     return raw.select(
-        "value",
-        "file",
-        "line_no",
+        "*",
         P.extract_timestamp(v).alias("ts"),
         P.extract_level(v).alias("level"),
         P.extract_thread(v).alias("thread"),

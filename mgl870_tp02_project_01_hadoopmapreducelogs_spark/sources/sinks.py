@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.mining import build_catalog
+
 
 def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     """S4 — header CSV sink (process_logs_v10.py:160). ``single_file``
@@ -54,19 +56,10 @@ def accumulate_catalog(old: DataFrame, new: DataFrame) -> DataFrame:
     """Reference semantics: re-running adds the new run's sizes onto the
     persisted state (Σ size grows run over run — BASELINE.md observables
     1,984,400 → 6,716,120). Full-outer merge on template, sizes summed,
-    ids re-ranked deterministically."""
-    from pyspark.sql import Window
-
-    merged = (
+    ids re-ranked deterministically (``mining.build_catalog``)."""
+    return build_catalog(
         old.select("template", "size")
         .unionByName(new.select("template", "size"))
         .groupBy("template")
         .agg(F.sum("size").alias("size"))
-    )
-    # intentionally single-partition over the bounded catalog (see
-    # mining._rank_templates for why the WindowExec WARN is expected
-    # here and scoped down in harness sessions)
-    w = Window.orderBy("template")
-    return merged.withColumn("cluster_id", F.row_number().over(w).cast("long")).select(
-        "cluster_id", "size", "template", F.sha2("template", 256).alias("template_hash")
     )

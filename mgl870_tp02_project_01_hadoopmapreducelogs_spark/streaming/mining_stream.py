@@ -4,10 +4,13 @@ The reference's Drain3 loop is already stream-shaped: lines arrive one
 at a time, state snapshots every minute (process_logs_v10.py:11-13,65),
 and the persisted miner accumulates across runs (drain3_state.bin,
 process_logs_v10.py:39-40). Here that becomes first-class Structured
-Streaming: ``readStream.text`` ingest of a growing log directory, the
-same masking expressions as batch (the preprocessing layer is shared),
-and template mining as a streaming aggregation whose state store plays
-the role of drain3_state.bin — checkpointed, exactly-once, unbounded.
+Streaming over the batch code itself: ``readStream.text`` ingest of a
+growing log directory with the batch scan options, the batch parser
+(``parse_stream`` IS ``sources.logs.parse_lines``), the batch template
+count (``mine_templates_stream`` IS ``operators.mining.template_counts``)
+as a streaming aggregation whose state store plays the role of
+drain3_state.bin — checkpointed, exactly-once, unbounded — and the
+batch ``DrainMiner`` fit rule for the faithful online Drain stream.
 
 The reference destroyed timestamps so it has no event-time semantics;
 we parse them, so late data is handled with a real watermark — a
@@ -16,11 +19,21 @@ capability the reference could not express (SURVEY §2.9).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import preprocess as P
-from ..sources.logs import CONTAINER_GLOB
+from ..operators.mining import template_counts
+from ..sources.logs import CONTAINER_GLOB, log_reader, parse_lines
+
+#: the batch parser: raw ``(value, file)`` stream rows keep their
+#: columns and gain ts/level/thread/logger/message/masked
+parse_stream = parse_lines
+#: T1 streaming: running ``(template, size)`` counts (complete/update mode)
+mine_templates_stream = template_counts
+
+_SINK_IDS = itertools.count(1)
 
 
 def read_log_stream(
@@ -30,40 +43,12 @@ def read_log_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """S1 as a stream: new ``container_*.log`` files appearing under
-    ``logs_dir`` are ingested incrementally."""
-    reader = (
-        spark.readStream.option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", glob)
-    )
+    ``logs_dir`` are ingested incrementally, as ``(value, file)`` rows
+    (no per-file line numbers: a stream has no end of file to rank by)."""
+    reader = log_reader(spark.readStream, glob, True)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.text(logs_dir)
-    return raw.withColumn("file", F.input_file_name())
-
-
-def parse_stream(raw: DataFrame, mask_rules=None) -> DataFrame:
-    """The batch parser verbatim — preprocessing is engine-shared code
-    (same Catalyst expressions compile in both modes)."""
-    v = F.col("value")
-    return raw.select(
-        "value",
-        "file",
-        P.extract_timestamp(v).alias("ts"),
-        P.extract_level(v).alias("level"),
-        P.extract_message(v).alias("message"),
-        P.mask(P.extract_message(v), mask_rules).alias("masked"),
-    )
-
-
-def mine_templates_stream(parsed: DataFrame) -> DataFrame:
-    """T1 streaming: running (template, size) counts — a stateless
-    shuffle-keyed streaming aggregation (complete/update mode). The
-    state store persists sizes across triggers exactly like
-    drain3_state.bin persisted cluster sizes across runs."""
-    return (
-        parsed.groupBy(F.col("masked").alias("template"))
-        .agg(F.count(F.lit(1)).alias("size"))
-    )
+    return reader.text(logs_dir).withColumn("file", F.input_file_name())
 
 
 def windowed_event_counts(
@@ -84,18 +69,21 @@ def windowed_event_counts(
 
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
     """Drive a (bounded) stream to completion into a memory sink — the
-    synchronous harness used by tests and the driver contract."""
+    synchronous harness used by tests and the driver contract. The sink
+    table is ``<name>_<n>``, unique per call, so repeated runs never
+    collide on a live query name."""
+    table = f"{name}_{next(_SINK_IDS)}"
     q = (
         stream_df.writeStream.outputMode(mode)
         .format("memory")
-        .queryName(name)
+        .queryName(table)
         .start()
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    return stream_df.sparkSession.table(name)
+    return stream_df.sparkSession.table(table)
 
 
 def new_template_feed_stream(parsed: DataFrame, masked_col: str = "masked") -> DataFrame:
@@ -151,63 +139,42 @@ def drain_mining_stream(
     ``(token_count, head)`` and keep each leaf's cluster list as that
     key's state — the tree becomes horizontally partitioned state, one
     leaf per key, exactly the role drain3_state.bin played single-node.
-    Each micro-batch emits the leaf's updated clusters (latest emission
-    per (leaf, cluster_idx) wins — an upsert change feed).
+    Each micro-batch rebuilds the leaf as a batch ``DrainMiner`` seeded
+    with its persisted clusters as they are, absorbs the batch's lines
+    with the batch fit rule (``DrainMiner.add``), and emits the leaf's
+    updated clusters (latest emission per (leaf, cluster_idx) wins — an
+    upsert change feed).
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from ..operators.drain import DrainMiner
 
-    MASK = "<*>"
-
     def update_leaf(key, pdfs, state: GroupState):
         n_toks, head = key
-        # leaf state: parallel lists of (template, size)
+        # depth 2: the state key already routed the line to its leaf
+        miner = DrainMiner(depth=2, sim_th=sim_th, max_clusters=max_clusters_per_leaf)
         if state.exists:
-            templates, sizes = state.get
-            clusters = [[t.split(" "), s] for t, s in zip(templates, sizes)]
-        else:
-            clusters = []
-        touched = False
+            for template, size in zip(*state.get):
+                miner.seed(template, int(size))
+        n_lines = 0
         for pdf in pdfs:
+            n_lines += len(pdf)
             for msg in pdf[masked_col]:
-                toks = DrainMiner._tokens(msg)
-                # faithful fit rule (round 5): wildcards excluded from
-                # similarity, param-count tie-break — same as batch add()
-                best, best_sim, best_p = None, -1.0, -1
-                for cl in clusters:
-                    s, p = DrainMiner._sim_fit(cl[0], toks)
-                    if s > best_sim or (s == best_sim and p > best_p):
-                        best, best_sim, best_p = cl, s, p
-                if best is not None and (
-                    best_sim >= sim_th or len(clusters) >= max_clusters_per_leaf
-                ):
-                    if best_sim >= sim_th:
-                        best[0] = [
-                            x if x == y else MASK for x, y in zip(best[0], toks)
-                        ]
-                    best[1] += 1
-                else:
-                    clusters.append([list(toks), 1])
-                touched = True
-        if not touched:
+                miner.add(msg)
+        if not n_lines:
             return iter([])
-        state.update(
-            (
-                [" ".join(c[0]) for c in clusters],
-                [c[1] for c in clusters],
-            )
-        )
+        templates, sizes = map(list, zip(*miner.templates()))
+        state.update((templates, sizes))
         return iter(
             [
                 pd.DataFrame(
                     {
-                        "n_toks": [int(n_toks)] * len(clusters),
-                        "head": [head] * len(clusters),
-                        "cluster_idx": list(range(len(clusters))),
-                        "template": [" ".join(c[0]) for c in clusters],
-                        "size": [c[1] for c in clusters],
+                        "n_toks": [int(n_toks)] * len(templates),
+                        "head": [head] * len(templates),
+                        "cluster_idx": list(range(len(templates))),
+                        "template": templates,
+                        "size": sizes,
                     }
                 )
             ]

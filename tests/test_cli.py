@@ -111,3 +111,15 @@ def test_cli_stream_incremental_catchup(spark, tmp_path):
     rows = _matrix_rows(out2)
     assert sum(int(r["Size"]) for r in rows) == 130
     assert any(r["Template"] == "Novel event <*>" for r in rows)
+
+
+def test_cli_first_stream_run_matches_batch_run(spark, tmp_path):
+    """A first --stream run over a fresh state writes the same matrix
+    rows as the default batch run: one parser, one catalog builder."""
+    corpus = tmp_path / "logs"
+    _write_corpus(corpus)
+    batch, stream = tmp_path / "batch", tmp_path / "stream"
+    assert run([str(corpus), "--out", str(batch)]) == 0
+    assert run([str(corpus), "--out", str(stream), "--state", str(tmp_path / "state"),
+                "--stream"]) == 0
+    assert _matrix_rows(stream) == _matrix_rows(batch)

@@ -177,3 +177,19 @@ def test_fit_path_cutover_invariants_match(spark, log_dir, monkeypatch):
     # apart — never the reverse by more than the same factor
     a, b = via_driver["n_clusters"], via_distributed["n_clusters"]
     assert min(a, b) * 3 >= max(a, b), (a, b)
+
+
+def test_seed_restores_clusters_without_merging():
+    # two persisted clusters that add() would fold into one template
+    a, b = "send block <*> to node alpha", "send block <*> to node beta"
+    merged = drain.DrainMiner(depth=2, sim_th=0.4)
+    merged.add(a, 3)
+    merged.add(b, 4)
+    assert merged.templates() == [("send block <*> to node <*>", 7)]
+
+    seeded = drain.DrainMiner(depth=2, sim_th=0.4)
+    assert [seeded.seed(a, 3), seeded.seed(b, 4)] == [0, 1]
+    assert seeded.templates() == [(a, 3), (b, 4)]
+    # later lines still fit the seeded clusters by the batch rule
+    seeded.add("send block <*> to node beta")
+    assert seeded.templates() == [(a, 3), (b, 5)]

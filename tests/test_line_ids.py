@@ -37,3 +37,19 @@ def test_line_ids_survive_multi_split_files(tmp_path):
         assert got.count() == n
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_ml_global_line_order_is_line_no_plus_file_offset(spark, log_dir):
+    """``--ml`` windows number lines 1..N in (file, line_no) order; the
+    index is the per-file ``line_no`` plus the sizes of earlier files."""
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.__main__ import (
+        _global_line_order,
+    )
+
+    parsed = logs.parse_lines(logs.read_log_dir(spark, log_dir))
+    rows = sorted(
+        (r.file, r.line_no, r._line_idx)
+        for r in _global_line_order(parsed).select("file", "line_no", "_line_idx").collect()
+    )
+    assert len({f for f, _, _ in rows}) == 2
+    assert [idx for _, _, idx in rows] == list(range(1, len(rows) + 1))

@@ -102,3 +102,25 @@ def test_accumulate_catalog_sums_sizes(spark, log_dir):
     # re-running the same corpus doubles every size (BASELINE.md observable)
     assert merged.agg(F.sum("size")).collect()[0][0] == 2 * total
     assert merged.count() == catalog.count()
+
+
+def test_every_catalog_builder_has_one_shape(spark, log_dir):
+    """mine_exact, mine_drainish, accumulate_catalog and the Drain fit
+    return the same columns, with dense 1..n ids in template order."""
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.operators import drain
+    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.sources import sinks
+
+    parsed = _parsed(spark, log_dir)
+    exact = mining.mine_exact(parsed)
+    catalogs = {
+        "exact": exact,
+        "drainish": mining.mine_drainish(parsed),
+        "accumulated": sinks.accumulate_catalog(exact, exact),
+        "drain": drain.fit_distributed(parsed),
+    }
+    for name, catalog in catalogs.items():
+        assert catalog.columns == ["cluster_id", "size", "template", "template_hash"], name
+        rows = sorted(catalog.collect(), key=lambda r: r.cluster_id)
+        assert [r.cluster_id for r in rows] == list(range(1, len(rows) + 1)), name
+        templates = [r.template for r in rows]
+        assert templates == sorted(templates), name

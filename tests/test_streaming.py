@@ -113,7 +113,6 @@ def test_streaming_minhash_dedup_first_arrival_wins(spark, tmp_path):
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.streamq import (
         minhash_bands_rowwise,
         minhash_dedup_stream,
-        _run_stream,
     )
 
     text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -141,7 +140,7 @@ def test_streaming_minhash_dedup_first_arrival_wins(spark, tmp_path):
         .parquet(str(tmp_path / "in"))
     )
     flags = minhash_dedup_stream(minhash_bands_rowwise(stream))
-    out = _run_stream(flags, "mh_dedup_test", mode="append")
+    out = mining_stream.run_to_memory(flags, "mh_dedup_test", mode="append")
     res = {
         r.doc_id: r.is_dup
         for r in out.groupBy("doc_id").agg(F.max("is_dup").alias("is_dup")).collect()
@@ -230,9 +229,6 @@ def test_streaming_incremental_index_multi_batch(spark, tmp_path):
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.functions import (
         text as TX,
     )
-    from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.streamq import (
-        _run_stream,
-    )
 
     indexed = "already in the corpus from a previous run"
     novel = "a genuinely new document nobody has seen"
@@ -272,7 +268,7 @@ def test_streaming_incremental_index_multi_batch(spark, tmp_path):
             F.count(F.lit(1)).alias("n_seen"),
         )
     )
-    out = _run_stream(stream, "inc_index_test", mode="complete").collect()
+    out = mining_stream.run_to_memory(stream, "inc_index_test", mode="complete").collect()
     # only the novel fingerprint survives; both its arrivals (one per
     # micro-batch — n_seen counts across the whole stream) merged
     assert len(out) == 1
@@ -360,7 +356,6 @@ def test_fast_minhash_family_stays_int64_and_flags_exact_copies(spark, tmp_path)
     from pyspark.sql.types import LongType, StringType
 
     from mgl870_tp02_project_01_hadoopmapreducelogs_spark.queries.streamq import (
-        _run_stream,
         minhash_bands_rowwise,
         minhash_dedup_stream,
     )
@@ -406,7 +401,7 @@ def test_fast_minhash_family_stays_int64_and_flags_exact_copies(spark, tmp_path)
     flags = minhash_dedup_stream(
         minhash_bands_rowwise(stream, family="xxhash64")
     )
-    out = _run_stream(flags, "mh_fast_test", mode="append")
+    out = mining_stream.run_to_memory(flags, "mh_fast_test", mode="append")
     res = {
         r.doc_id: r.is_dup
         for r in out.groupBy("doc_id")
